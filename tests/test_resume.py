@@ -111,3 +111,27 @@ def test_sparse_sample_fallback_fires_on_small_input(spark, transcripts):
     oversized conversation."""
     heavy = P.heavy_conv_ids(transcripts, fraction=0.04, threshold=0.2)
     assert "conv-00000" in heavy
+
+
+def test_missing_or_empty_lineage_is_first_run(spark, tmp_path):
+    """No lineage directory, or one holding no committed parquet file
+    (a commit that never finished), is a first run: nothing skipped."""
+    assert P.committed_buckets(spark, str(tmp_path / "absent")) == []
+    (tmp_path / "empty" / "_temporary").mkdir(parents=True)
+    assert P.committed_buckets(spark, str(tmp_path / "empty")) == []
+
+
+def test_damaged_lineage_fails_instead_of_reprocessing(spark, transcripts,
+                                                       tmp_path):
+    """A lineage table that exists but cannot be read is NOT a first
+    run: the job must fail before it writes anything, rather than
+    reprocess every bucket and append a second set of lineage rows."""
+    out = tmp_path / "out"
+    lin = tmp_path / "lineage"
+    lin.mkdir()
+    (lin / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        P.run_extract_job(spark, transcripts, str(out), str(lin),
+                          n_buckets=N_BUCKETS)
+    assert not out.exists()
+    assert [p.name for p in lin.iterdir()] == ["part-0.parquet"]

@@ -1,17 +1,14 @@
-"""Pure-column Markdown emitters (SURVEY.md §2.4).
+"""Pure-column Markdown emitter (SURVEY.md §2.4).
 
-The simple templates compile to codegen'd Catalyst `concat`
-expressions — the fast path for plain-text payloads, measurably
-cheaper than crossing into Python.  Byte-compatibility with
-kernels.wrap_text_md is enforced by tests.
+The E8 template as a codegen'd Catalyst `concat` expression, for
+Column pipelines that wrap plain text without an extraction stage.
+Byte-compatibility with kernels.wrap_text_md is enforced by tests.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from .text import turn_stem
 
 
 def wrap_text_md(stem: Column, text: Column) -> Column:
@@ -23,19 +20,3 @@ def wrap_text_md(stem: Column, text: Column) -> Column:
         F.coalesce(text, F.lit("")), F.lit("\n```\n"),
     )
 
-
-def wrap_turn_md(conv_id: Column, turn_idx: Column, text: Column) -> Column:
-    return wrap_text_md(turn_stem(conv_id, turn_idx), text)
-
-
-def verify_markdown(md: Column) -> Column:
-    """Column twin of kernels.verify_markdown — the D2 gate
-    (delete_manager.py:102-130): non-null, length > 0, first 1KB
-    non-blank.  NB: `rlike('\\S')`, not `trim != ''` — SQL trim strips
-    only spaces whereas the reference's Python .strip() strips ALL
-    whitespace."""
-    return (
-        md.isNotNull()
-        & (F.length(md) > 0)
-        & F.substring(md, 1, 1024).rlike(r"\S")
-    )

@@ -39,22 +39,6 @@ def sanitize_stem(col: Column, default: str = "document") -> Column:
     return F.when(cleaned == "", F.lit(default)).otherwise(cleaned)
 
 
-def turn_stem(conv_id: Column, turn_idx: Column) -> Column:
-    """Column twin of kernels.turn_stem: `{conv_id}_{turn_idx:05d}`
-    sanitized (FIXTURES.md §1 title-key convention).  format_string,
-    NOT F.lpad: lpad TRUNCATES strings longer than the pad width, so a
-    6-digit turn_idx would silently lose its leading digit, and it
-    also mangles negatives ('00-12' vs the f-string's '-0012');
-    Java's %05d matches Python's :05d in both cases."""
-    # format_string renders a NULL arg as the literal string 'null'
-    # (Java Formatter) — guard so a null turn_idx nulls the stem like
-    # every other null input to concat
-    idx = F.when(turn_idx.isNull(), F.lit(None).cast("string")).otherwise(
-        F.format_string("%05d", turn_idx.cast("long")))
-    raw = F.concat(conv_id, F.lit("_"), idx)
-    return sanitize_stem(raw)
-
-
 def message_tail(col: Column, n: int = 1200) -> Column:
     """Tail-truncation of failure messages to the last n chars
     (doc_to_md/main.py:375-376 keeps stderr[-1200:], stdout[-600:])."""

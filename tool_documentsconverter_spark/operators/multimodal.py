@@ -10,6 +10,12 @@ deterministic fake extractor (clearly marked).  Everything Spark-side
 — schema, batch shape, partitioning, failure isolation — is real and
 tested; swapping in PIL/librosa at deploy time changes only
 `_decode_image_real`.
+
+No media stage here is fan_out'd (plans/fanout.py): the per-row header
+decode is ~10us, so repartitioning the payload column costs more than
+the extra cores recover on every media query (A/B at sf1.0, local[32]:
+media_resize 0.53s -> 0.70s with fan_out), and a real corpus scan has
+enough splits anyway.
 """
 
 from __future__ import annotations
@@ -207,11 +213,6 @@ def extract_media_features(df: DataFrame, id_col: str = "media_id",
     ``use_stub="stdlib"`` pins the header-parse+hash-fallback decoder
     (both environment-independent — what the parity oracles replay;
     see _pick_decoder); default None probes for PIL executor-side."""
-    # NOT fan_out'd (round-8 A/B at sf1.0): the per-row header decode
-    # is ~10us, so repartitioning the payload column costs more than
-    # the extra cores recover on every media query (0.53s -> 0.70s
-    # measured for media_resize); a real corpus scan has enough
-    # splits anyway
     src = df.select(F.col(id_col).alias("media_id"),
                     F.col(payload_col).alias("payload"))
     return src.mapInArrow(
@@ -316,11 +317,6 @@ def resize_media(df: DataFrame, max_side: int = 256,
     oracle-replayed paths); the target-dimension math (`fit_within`)
     is shared by all paths and integer-only, so the `media_resize`
     oracle replays it exactly."""
-    # NOT fan_out'd (round-8 A/B at sf1.0): the per-row header decode
-    # is ~10us, so repartitioning the payload column costs more than
-    # the extra cores recover on every media query (0.53s -> 0.70s
-    # measured for media_resize); a real corpus scan has enough
-    # splits anyway
     src = df.select(F.col(id_col).alias("media_id"),
                     F.col(payload_col).alias("payload"))
     return src.mapInArrow(
@@ -382,11 +378,6 @@ def sample_frames(df: DataFrame, n_frames: int = 4,
     swaps in PyAV/ffmpeg inside `_frame_batches` only); the Spark
     surface — binary in, multiplied rows out of one Arrow stage,
     failure isolation per asset — is real and tested."""
-    # NOT fan_out'd (round-8 A/B at sf1.0): the per-row header decode
-    # is ~10us, so repartitioning the payload column costs more than
-    # the extra cores recover on every media query (0.53s -> 0.70s
-    # measured for media_resize); a real corpus scan has enough
-    # splits anyway
     src = df.select(F.col(id_col).alias("media_id"),
                     F.col(payload_col).alias("payload"))
     return src.mapInArrow(
@@ -530,11 +521,6 @@ def extract_audio_features(df: DataFrame, id_col: str = "media_id",
     one Arrow stage.  Entirely real — header fields, not a stub: the
     metadata a curation pipeline filters on never needs a decoder.
     Unparseable payloads isolate as status='failed' rows."""
-    # NOT fan_out'd (round-8 A/B at sf1.0): the per-row header decode
-    # is ~10us, so repartitioning the payload column costs more than
-    # the extra cores recover on every media query (0.53s -> 0.70s
-    # measured for media_resize); a real corpus scan has enough
-    # splits anyway
     src = df.select(F.col(id_col).alias("media_id"),
                     F.col(payload_col).alias("payload"))
     return src.mapInArrow(

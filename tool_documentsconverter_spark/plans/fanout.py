@@ -23,14 +23,20 @@ partitioned input.  (The check costs a plan conversion, no job.)
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
 def fan_out(df: DataFrame) -> DataFrame:
-    if os.environ.get("SPARK_GRAFT_NO_FANOUT"):  # A/B escape hatch
-        return df
+    """Repartition ``df`` to ``defaultParallelism`` when it has fewer
+    partitions than that; otherwise return it unchanged.
+
+    Contract: the check reads the partition count ``df`` has now,
+    before any shuffle this call adds.  That is the scan's split count
+    only when no exchange sits between the scan and this call, so call
+    it directly above a scan.  Above a join, aggregate or repartition
+    it sees the exchange's count instead, which can exceed
+    ``defaultParallelism`` while a one-partition scan branch below it
+    still runs on one core."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:

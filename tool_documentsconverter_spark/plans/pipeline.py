@@ -34,6 +34,7 @@ import time
 from dataclasses import dataclass
 from typing import List, Optional, Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -149,15 +150,26 @@ def partition_for_extraction(df: DataFrame, heavy: Sequence[str],
     return out.sortWithinPartitions("conv_id", "turn_idx").drop("salt")
 
 
+# the only read failures that mean "first run": no lineage directory,
+# or one holding no committed parquet file yet
+_NO_LINEAGE = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
 def committed_buckets(spark: SparkSession, lineage_path: str) -> List[int]:
+    """Buckets already committed to the lineage table; [] when no
+    lineage exists yet.  Any other read failure (a corrupt or
+    unreadable table) propagates: treating it as a first run would
+    reprocess every bucket and append a second set of lineage rows."""
     try:
         rows = (
             spark.read.parquet(lineage_path)
             .select("bucket").distinct().collect()
         )
-        return sorted(r["bucket"] for r in rows)
-    except Exception:  # first run: lineage table absent
-        return []
+    except AnalysisException as e:
+        if e.getCondition() in _NO_LINEAGE:
+            return []
+        raise
+    return sorted(r["bucket"] for r in rows)
 
 
 def run_extract_job(
@@ -174,7 +186,6 @@ def run_extract_job(
     only_buckets: Optional[Sequence[int]] = None,
     include_fmts: Optional[Sequence[str]] = None,
     exclude_convs: Optional[Sequence[str]] = None,
-    text_path: str = "arrow",
     time_budget_s: Optional[float] = None,
 ) -> JobSummary:
     """The full north-rule job: resume anti-join -> salted repartition
@@ -241,14 +252,10 @@ def run_extract_job(
     # scan; doc_to_md/main.py:580-592 analog).  The input-side
     # observation makes rows_in a real measurement, so a row silently
     # dropped inside the extraction stage is detected, not papered
-    # over.  With text_path="column" the input splits into two
-    # branches, each with its own Observation (one Observation object
-    # cannot appear in two plan branches), and rows_in is their sum.
+    # over.
     from pyspark.sql import Observation
 
-    obs_arrow_in = Observation("extract_input_arrow")
-    obs_text_in = (Observation("extract_input_text")
-                   if text_path == "column" else None)
+    obs_in = Observation("extract_input")
     # drop the raw payload from the OUTPUT — inside the Arrow stage, so
     # the payload bytes never make the Python -> JVM return trip: md
     # already embeds the extracted content, and carrying text through
@@ -256,9 +263,7 @@ def run_extract_job(
     # writes only the .md artifact, never a copy of the source)
     extracted = extract(staged, hint_col="fmt_hint",
                         drop_cols=("text", "fmt_hint"),
-                        text_path=text_path,
-                        observe_arrow_in=obs_arrow_in,
-                        observe_text_in=obs_text_in,
+                        observe_in=obs_in,
                         time_budget_s=time_budget_s)
     obs = Observation("extract_metrics")
     observed = extracted.observe(
@@ -279,9 +284,7 @@ def run_extract_job(
         .parquet(output_path)
     )
     m = obs.get
-    rows_in_total = int(obs_arrow_in.get["rows_in"])
-    if obs_text_in is not None:
-        rows_in_total += int(obs_text_in.get["rows_in"])
+    rows_in_total = int(obs_in.get["rows_in"])
     phases["extract_write"] = round(time.perf_counter() - t, 2)
     if rows_in_total != int(m["rows_out"]):
         raise RuntimeError(
