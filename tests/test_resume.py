@@ -37,9 +37,11 @@ def test_kill_and_resume_zero_reprocessing(spark, transcripts, tmp_path):
                       n_buckets=N_BUCKETS, input_snapshot="full")
 
     # "killed" run: only the first half of the buckets committed
-    P.run_extract_job(spark, transcripts, out, lin, n_buckets=N_BUCKETS,
-                      only_buckets=list(range(N_BUCKETS // 2)),
-                      input_snapshot="part1")
+    killed = P.run_extract_job(spark, transcripts, out, lin,
+                               n_buckets=N_BUCKETS,
+                               only_buckets=list(range(N_BUCKETS // 2)),
+                               input_snapshot="part1")
+    assert killed.buckets_processed == N_BUCKETS // 2
     lineage1 = spark.read.parquet(lin).collect()
     committed1 = {r.bucket for r in lineage1}
     assert committed1 <= set(range(N_BUCKETS // 2))
@@ -48,6 +50,7 @@ def test_kill_and_resume_zero_reprocessing(spark, transcripts, tmp_path):
     summary = P.run_extract_job(spark, transcripts, out, lin,
                                 n_buckets=N_BUCKETS, input_snapshot="part2")
     assert summary.buckets_skipped == len(committed1)
+    assert summary.buckets_processed == N_BUCKETS - len(committed1)
 
     lineage2 = spark.read.parquet(lin).collect()
     # zero reprocessing: each bucket committed exactly once
@@ -70,6 +73,31 @@ def test_force_reprocesses_everything(spark, transcripts, tmp_path):
                            n_buckets=N_BUCKETS, force=True)
     assert s2.buckets_skipped == 0
     assert s2.rows_out == N_TURNS
+
+
+def test_stage_width_follows_shuffle_partitions(spark, tmp_path):
+    """The extraction stage runs at `spark.sql.shuffle.partitions`
+    width, not one Python task per bucket: 64 buckets in a session
+    whose shuffle width is 8 give no stage wider than 8 tasks."""
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert width < 64  # else one task per bucket would pass too
+    sc = spark.sparkContext
+    df = synth_transcripts(spark, N_TURNS, partitions=2)
+    sc.setJobGroup("stage-width", "run_extract_job at 64 buckets")
+    try:
+        summary = P.run_extract_job(spark, df, str(tmp_path / "out"),
+                                    str(tmp_path / "lineage"), n_buckets=64)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert summary.rows_out == N_TURNS
+    tracker = sc.statusTracker()
+    tasks = [
+        stage.numTasks
+        for jid in tracker.getJobIdsForGroup("stage-width")
+        for sid in tracker.getJobInfo(jid).stageIds
+        if (stage := tracker.getStageInfo(sid)) is not None
+    ]
+    assert tasks and max(tasks) <= width, tasks
 
 
 def test_salting_splits_heavy_conversation(spark, transcripts):

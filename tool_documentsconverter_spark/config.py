@@ -44,7 +44,7 @@ def default_config() -> Dict[str, Any]:
             "fail_fast": False,        # False = reference failure isolation
         },
         "performance": {
-            "partitions": 0,           # 0 = derive from buckets (auto)
+            "partitions": 0,           # 0 = spark.sql.shuffle.partitions
             "buckets": 64,             # lineage/checkpoint granularity
             "salt": 32,                # skew sub-splits for heavy convs
             "heavy_threshold": 0.05,   # sample share marking a heavy conv

@@ -101,7 +101,9 @@ def _make_extractor(hint_col: str | None = None, drop_cols: tuple = (),
     `fmt` column, which extract() adds before the stage.
 
     ``time_budget_s`` is the SOFT per-batch wall-clock budget (SURVEY
-    §2.11 O8(c)): checked BETWEEN rows of the structured dispatch
+    §2.11 O8(c)), per Arrow batch of up to
+    `spark.sql.execution.arrow.maxRecordsPerBatch` rows (not per
+    task or per row): checked BETWEEN rows of the structured dispatch
     loop — once a batch's elapsed time crosses it, every remaining
     structured row is emitted as status='failed' with a timeout
     message instead of entering the kernel, so one pathological

@@ -12,11 +12,18 @@ Scale rationale (the part the judge grades):
    a sample sketch (never a full groupBy over the input), and a salt
    column spreads only those conversations across `salt` sub-partitions.
    Normal conversations keep salt=0 and stay co-located.
- - `repartition(conv_id, salt)` + `sortWithinPartitions(conv_id,
-   turn_idx)` gives the stable (conv_id, turn_idx) ordering the
-   north-rule demands WITHOUT a global sort (no range-exchange over
-   10^12 rows); global order is recovered at read time by sorting the
-   final, much smaller, per-bucket outputs.
+ - `repartition(bucket, salt)` at `spark.sql.shuffle.partitions` width
+   + `sortWithinPartitions(bucket, conv_id, turn_idx)` gives the
+   stable (conv_id, turn_idx) ordering the north-rule demands WITHOUT
+   a global sort (no range-exchange over 10^12 rows); global order is
+   recovered at read time by sorting the final, much smaller,
+   per-bucket outputs.  The width is NOT `n_buckets`: every partition
+   is one Python task, whose fixed per-task cost is tens of times a
+   JVM task's (BENCH/BASELINE.md, "Extraction stage width"), so a
+   large bucket count must not become thousands of Python tasks.
+   Several buckets share one task instead; buckets stay the
+   lineage/resume unit and `partitionBy(bucket)` still writes one
+   directory per bucket.
  - Output parquet is partitioned by bucket with dynamic partition
    overwrite: a bucket interrupted mid-write is simply rewritten on
    resume (lineage rows are appended only after the write commits, so
@@ -222,6 +229,9 @@ def run_extract_job(
 
     done = [] if force else committed_buckets(spark, lineage_path)
     skipped = len(done)
+    todo = set(range(n_buckets)).difference(done)
+    if only_buckets is not None:
+        todo &= set(only_buckets)
     if done:
         # bucket-level skip (F4 anti-join); a literal isin over <=
         # n_buckets ints beats a join — it pushes into the parquet scan
@@ -238,13 +248,17 @@ def run_extract_job(
     phases["sketch"] = round(time.perf_counter() - t, 2)
     # shuffle key is (bucket, salt), NOT (conv_id, salt): bucket is a
     # function of conv_id so conversations stay co-located (the stable
-    # per-conv ordering still holds after sortWithinPartitions), but
-    # each task now holds ~1 bucket, so partitionBy(bucket) writes
-    # O(tasks) files instead of O(tasks x buckets)
+    # per-conv ordering still holds after sortWithinPartitions), and
+    # a bucket lands in one task (one holding a heavy conversation in
+    # at most `salt`), so partitionBy(bucket) writes O(buckets) files,
+    # not O(tasks x buckets).  Sorting by bucket first hands the
+    # writer rows already in its partition-column order.
+    width = num_partitions or int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
     staged = (
         salted(df, heavy, salt)
-        .repartition(num_partitions or n_buckets, "bucket", "salt")
-        .sortWithinPartitions("conv_id", "turn_idx")
+        .repartition(width, "bucket", "salt")
+        .sortWithinPartitions("bucket", "conv_id", "turn_idx")
         .drop("salt")
     )
     # single pass: write + observe counters on BOTH sides of the
@@ -325,7 +339,7 @@ def run_extract_job(
         rows_out=int(m["rows_out"]),
         ok=int(m["ok"]),
         failed=int(m["failed"]),
-        buckets_processed=n_buckets - skipped,
+        buckets_processed=len(todo),
         buckets_skipped=skipped,
         seconds=time.perf_counter() - t0,
         phase_seconds=phases,

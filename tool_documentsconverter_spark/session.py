@@ -10,7 +10,9 @@ via spark-submit --conf.  Every setting is a scale decision:
    splitting for the join-shaped operators (UDF-stage skew is handled
    explicitly with salting in plans/pipeline.py — AQE cannot see it).
  - shuffle.partitions sized for the sandbox; a 1000-executor run sets
-   this to ~2-3x total cores via --conf.
+   this to ~2-3x total cores via --conf.  It also sets the width of
+   the extraction job's Arrow stage (plans/pipeline.py), so it is the
+   number of Python tasks per job.
  - session timezone pinned UTC so timestamp semantics match the DuckDB
    oracle byte-for-byte.
 """
